@@ -3,6 +3,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materializer.MaterializeOps
 
 /** One-call corpus cleaning — the C4/Gopher-style pipeline a
   * training-data run applies before tokenization:
@@ -51,10 +52,13 @@ object Clean {
     // Materialize the gate survivors: the exact stage's min-agg AND
     // its semi-join probe both read them, so the (C4/Gopher/token)
     // gate — normalize+tokenize string work over the full corpus —
-    // otherwise runs twice before near-dup even starts. LAZY: the
-    // exact-survivor materialization below populates these blocks
-    // inside its own job (no separate scheduled pass).
-    d = d.localCheckpoint(false)
+    // otherwise runs twice before near-dup even starts. LAZY under the
+    // default strategy, like the exact-survivor point below: no job
+    // runs here; the first action downstream (near-dup's eager
+    // verified-pair checkpoint) populates both in its own job, where
+    // the min-agg and semi-join branches can still race to compute the
+    // gate once each — a PersistedTable strategy closes that.
+    d = d.materialized("clean_gate_survivors")
     // exact dedup: keep the smallest id per identical text — the
     // skew-safe min(id)-agg + semi-join shape (see
     // [[Dedup.dropExactDuplicates]]; a row_number window serializes a
@@ -72,7 +76,7 @@ object Clean {
     // the near-dup stage's shingle persist populate is the first
     // consumer and fills these blocks in-job; the final anti-join
     // reads them back.
-    d = d.localCheckpoint(false)
+    d = d.materialized("clean_exact_survivors")
     // near-dup removal (greedy keep-lowest-id)
     Dedup.dropNearDuplicates(d, idCol, textCol, cfg.nearDupThreshold,
       cfg.shingleK, cfg.numHashes, cfg.bands)

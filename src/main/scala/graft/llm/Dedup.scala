@@ -206,12 +206,44 @@ object Dedup {
     array(entries: _*)
   }
 
-  /** Pairwise (i&lt;j) combinations of a sorted bucket-member array —
-    * per-row HOF, no join. Members are `struct(id, payload)`. */
-  private[graft] def bucketPairs(members: Column,
-                          pair: (Column, Column) => Column): Column =
-    flatten(transform(members, (x, i) =>
-      transform(slice(members, i + 2, size(members)), y => pair(x, y))))
+  /** Bucket half of [[cappedBucketPairs]]: `rows` grouped by `keys`
+    * into sorted `member` lists, keeping buckets of `minSize` to `cap`
+    * members; the keyed width pin ([[pinKeyed]]) is also the grouping's
+    * exchange. [[crossCandidates]] keeps singletons (`minSize = 1`) and
+    * names each side's list (`out`). */
+  private def cappedBuckets(rows: DataFrame, keys: Seq[String],
+                            member: Column, cap: Int, minSize: Int = 2,
+                            out: String = "members"): DataFrame =
+    pinKeyed(rows, keys.map(col): _*)
+      .groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(member)).as(out))
+      .filter(size(col(out)).between(minSize, cap))
+
+  /** The near-dup bucket rule, written once for every LSH, fingerprint
+    * and media path: group `rows` by `keys` into sorted `member` lists,
+    * drop every bucket over `cap` members WHOLE (boilerplate content
+    * that would go quadratic), and emit `pair(x, y)` — one column per
+    * struct field — for the i&lt;j combinations of the rest, per row,
+    * with no self-join. Pair generation is byte-tiny but CPU-quadratic:
+    * measured 216 s on 1-3 AQE-coalesced cores vs ~4 s pinned wide. */
+  private[graft] def cappedBucketPairs(rows: DataFrame, keys: Seq[String],
+                                       member: Column, cap: Int)(
+      pair: (Column, Column) => Column): DataFrame = {
+    val m = col("members")
+    cappedBuckets(rows, keys, member, cap)
+      .select(explode(flatten(transform(m, (x, i) =>
+        transform(slice(m, i + 2, size(m)), y => pair(x, y))))).as("p"))
+      .select(col("p.*"))
+  }
+
+  /** `sigs` with one row per LSH band: the `carry` columns plus
+    * `(band, bucket)` from [[lshBandKeys]]. */
+  private def lshBanded(sigs: DataFrame, numHashes: Int, bands: Int,
+                        carry: String*): DataFrame =
+    sigs.select(carry.map(col) :+
+        explode(lshBandKeys(col("sig"), numHashes, bands)).as("bk"): _*)
+      .select(carry.map(col) ++ Seq(
+        col("bk.band").as("band"), col("bk.bucket").as("bucket")): _*)
 
   /** MinHash-LSH candidate pairs: shingle → minhash → band → bucket →
     * in-bucket combinations. Returns (id_a, id_b, jaccard_est) with
@@ -243,65 +275,24 @@ object Dedup {
   def candidatesFromSignatures(withSig: DataFrame, numHashes: Int,
                                bands: Int, maxBucketSize: Int,
                                withEst: Boolean = true): DataFrame = {
-    val bandKeys = explode(lshBandKeys(col("sig"), numHashes, bands)).as("bk")
+    val keys = Seq("band", "bucket")
     if (withEst) {
-      val banded = withSig
-        .select(col("doc_id"), col("sig"), bandKeys)
-        .select(col("doc_id"), col("sig"),
-          col("bk.band").as("band"), col("bk.bucket").as("bucket"))
-      // pair generation is quadratic in bucket size but byte-tiny —
-      // measured 216 s on 1-3 AQE-coalesced cores vs ~4 s pinned wide.
-      // The width pin is the PRE-agg keyed repartition (REPARTITION_BY_NUM
-      // is AQE-coalescing-exempt and the groupBy reuses its layout), not
-      // a second round-robin exchange after the agg
-      val buckets = pinKeyed(banded, col("band"), col("bucket"))
-        .groupBy("band", "bucket")
-        .agg(sort_array(collect_list(struct(col("doc_id"), col("sig"))))
-          .as("members"))
-        .filter(size(col("members")).between(2, maxBucketSize))
       // native sig_agree: one call per in-bucket pair — the
       // interpreted zip_with twin was the hot path when borderline
       // families make candidate counts quadratic
       val est = (a: Column, b: Column) =>
         call_function("sig_agree", a, b).cast("double") / numHashes
-      buckets
-        .select(explode(bucketPairs(col("members"), (x, y) => struct(
-          x.getField("doc_id").as("id_a"),
+      cappedBucketPairs(lshBanded(withSig, numHashes, bands, "doc_id", "sig"),
+        keys, struct(col("doc_id"), col("sig")), maxBucketSize) { (x, y) =>
+        struct(x.getField("doc_id").as("id_a"),
           y.getField("doc_id").as("id_b"),
-          est(x.getField("sig"), y.getField("sig")).as("jaccard_est"))))
-          .as("p"))
-        .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
-          col("p.jaccard_est").as("jaccard_est"))
-        .groupBy("id_a", "id_b").agg(max("jaccard_est").as("jaccard_est"))
-    } else {
-      val buckets =
-        bandedIdBuckets(withSig, numHashes, bands, "members",
-          minSize = 2, maxBucketSize = maxBucketSize)
-      buckets
-        .select(explode(bucketPairs(col("members"), (x, y) => struct(
-          x.as("id_a"), y.as("id_b")))).as("p"))
-        .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-        .distinct()
-    }
+          est(x.getField("sig"), y.getField("sig")).as("jaccard_est"))
+      }.groupBy("id_a", "id_b").agg(max("jaccard_est").as("jaccard_est"))
+    } else
+      cappedBucketPairs(lshBanded(withSig, numHashes, bands, "doc_id"),
+        keys, col("doc_id"), maxBucketSize)(
+        (x, y) => struct(x.as("id_a"), y.as("id_b"))).distinct()
   }
-
-  /** Shared per-side bucket builder for the ids-only paths: band-key
-    * explode → (band, bucket) groupBy → sorted member list, with the
-    * size-cap filter that keeps a boilerplate bucket from ever going
-    * quadratic (or cross-producting, on the cross-set path). ONE
-    * definition so the cap semantics can't drift between
-    * [[candidatesFromSignatures]] and [[crossCandidates]]. */
-  private def bandedIdBuckets(sigs: DataFrame, numHashes: Int, bands: Int,
-                              out: String, minSize: Int,
-                              maxBucketSize: Int): DataFrame =
-    pinKeyed(sigs.select(col("doc_id"),
-        explode(lshBandKeys(col("sig"), numHashes, bands)).as("bk"))
-      .select(col("doc_id"),
-        col("bk.band").as("band"), col("bk.bucket").as("bucket")),
-      col("band"), col("bucket"))
-      .groupBy("band", "bucket")
-      .agg(sort_array(collect_list(col("doc_id"))).as(out))
-      .filter(size(col(out)).between(minSize, maxBucketSize))
 
   /** Exact n-gram Jaccard for a candidate pair set: joins candidate ids
     * back to shingle sets (equi-join on id) and computes
@@ -520,9 +511,10 @@ object Dedup {
                       numHashes: Int, bands: Int,
                       maxBucketSize: Int = 1000): DataFrame = {
     def buckets(df: DataFrame, out: String) =
-      bandedIdBuckets(df, numHashes, bands, out,
-        minSize = 1, maxBucketSize = maxBucketSize)
-    // both sides come out of bandedIdBuckets hash-partitioned by
+      cappedBuckets(lshBanded(df, numHashes, bands, "doc_id"),
+        Seq("band", "bucket"), col("doc_id"), maxBucketSize,
+        minSize = 1, out = out)
+    // both sides come out of cappedBuckets hash-partitioned by
     // (band, bucket) at full pinned width, so this join schedules no
     // exchange and the cross explosion below already runs wide
     buckets(newSigs, "mn").join(buckets(catalogSigs, "mc"),
@@ -1112,20 +1104,12 @@ object Dedup {
           struct(lit(b).as("band"),
             shiftright(col("sh"), b * 16).bitwiseAND(lit(0xFFFFL)).as("bucket"))): _*)).as("bk"))
         .select(col("doc_id"), col("sh"), col("bk.band"), col("bk.bucket"))
-    val buckets = pinKeyed(banded, col("band"), col("bucket"))
-      .groupBy("band", "bucket")
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("sh"))))
-        .as("members"))
-      .filter(size(col("members")).between(2, maxBucketSize))
-    buckets
-      .select(explode(bucketPairs(col("members"), (x, y) => struct(
-        x.getField("doc_id").as("id_a"),
+    cappedBucketPairs(banded, Seq("band", "bucket"),
+      struct(col("doc_id"), col("sh")), maxBucketSize) { (x, y) =>
+      struct(x.getField("doc_id").as("id_a"),
         y.getField("doc_id").as("id_b"),
-        hamming(x.getField("sh"), y.getField("sh")).as("dist"))))
-        .as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
-        col("p.dist").as("dist"))
-      .filter(col("dist") <= maxDist)
+        hamming(x.getField("sh"), y.getField("sh")).as("dist"))
+    }.filter(col("dist") <= maxDist)
       .groupBy("id_a", "id_b").agg(min("dist").as("dist"))
   }
 }

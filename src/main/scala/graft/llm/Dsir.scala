@@ -151,7 +151,10 @@ object Dsir {
     * target slice exactly — so the slice's tokenize + md5 pass (the
     * dominant per-row kernel) is never run a second time. The id list
     * comes from a text-column-pruned scan. Scores are bit-identical
-    * to `importanceScores(raw, raw.filter(targetPred), ...)`. */
+    * to `importanceScores(raw, raw.filter(targetPred), ...)` PROVIDED
+    * `idCol` is unique in `raw`: the target mass is summed per id, so
+    * a duplicated id with any one row matching `targetPred` counts
+    * ALL of its rows' occurrences as target. */
   def importanceScoresSubset(raw: DataFrame, targetPred: Column,
                              idCol: String, textCol: String,
                              nBuckets: Int = 1024): DataFrame = {

@@ -486,12 +486,12 @@ object Multimodal {
     * by pigeonhole it AGREES on at least one band and becomes a
     * candidate (full recall — hence the hard `maxDist ≤ 7` limit,
     * beyond which banding would silently drop true pairs). Candidates
-    * verify by exact popcount. Scale shape: band equi-join on small
-    * keys with a per-bucket size cap (the [[Dedup]] maxBucketSize
-    * guard: a degenerate corpus of near-identical hashes must not go
-    * quadratic — capped buckets drop whole, trading recall ONLY on
-    * boilerplate-like clusters), distinct candidate pairs, cheap XOR
-    * verify — never all-pairs. */
+    * verify by exact popcount. Scale shape: the
+    * [[Dedup.cappedBucketPairs]] bucket rule on (band, band value) — a
+    * degenerate corpus of near-identical hashes must not go quadratic,
+    * so over-cap buckets drop whole, trading recall ONLY on
+    * boilerplate-like clusters — then distinct candidate pairs and a
+    * cheap XOR verify; never all-pairs. */
   def nearDuplicateMedia(hashes: DataFrame, maxDist: Int = 3,
                          maxBucketSize: Int = 1000): DataFrame = {
     require(maxDist >= 0 && maxDist <= 7,
@@ -501,17 +501,11 @@ object Multimodal {
       explode(sequence(lit(0), lit(7))).as("band"))
       .withColumn("bv",
         expr("shiftrightunsigned(ahash, band * 8)").bitwiseAND(lit(0xFFL)))
-    val capped = banded.join(
-      banded.groupBy("band", "bv").agg(count(lit(1)).as("_bn"))
-        .where(col("_bn") <= maxBucketSize),
-      Seq("band", "bv"), "left_semi")
-    val a = capped.select(col("band"), col("bv"),
-      col("path").as("path_a"), col("ahash").as("ha"))
-    val b = capped.select(col("band"), col("bv"),
-      col("path").as("path_b"), col("ahash").as("hb"))
-    a.join(b, Seq("band", "bv"))
-      .where(col("path_a") < col("path_b"))
-      .select("path_a", "path_b", "ha", "hb").distinct()
+    Dedup.cappedBucketPairs(banded, Seq("band", "bv"),
+      struct(col("path"), col("ahash")), maxBucketSize) { (x, y) =>
+      struct(x.getField("path").as("path_a"), y.getField("path").as("path_b"),
+        x.getField("ahash").as("ha"), y.getField("ahash").as("hb"))
+    }.where(col("path_a") < col("path_b")).distinct()
       .withColumn("hamming", bit_count(col("ha").bitwiseXOR(col("hb"))))
       .where(col("hamming") <= maxDist)
       .select("path_a", "path_b", "hamming")

@@ -140,14 +140,18 @@ object Similarity {
               vecCol: String = "embedding"): DataFrame = {
     val c = corpus.select(col(idCol).as("nn_id"), col(vecCol).as("nn_vec"),
       lshBucket(col(vecCol), nBits, dim).as("bucket"))
-    val qBucket = lshBucket(col(vecCol), nBits, dim)
+    // project the base bucket once: the kernel is non-deterministic to
+    // the optimizer, so no subexpression elimination would share it
+    // across the nBits + 1 probe expressions
+    val qBucket = col("q_bucket")
     val probes =
       if (multiprobe)
         array(qBucket +: (0 until nBits).map(i =>
           qBucket.bitwiseXOR(lit(1L << i))): _*)
       else array(qBucket)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"),
-      explode(probes).as("bucket"))
+        lshBucket(col(vecCol), nBits, dim).as("q_bucket"))
+      .select(col("query_id"), col("q_vec"), explode(probes).as("bucket"))
     val scored = c.join(q, Seq("bucket"))
       .filter(col("nn_id") =!= col("query_id"))
       // a (query, candidate) pair can meet in several probe buckets
@@ -570,24 +574,14 @@ object Similarity {
                         maxBucketSize: Int = 10000): DataFrame = {
     val c = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"),
       lshBucket(col(vecCol), nBits, dim).as("bucket"))
-    // one scan → bucket groupBy → in-bucket pairwise combinations
-    // (no self-join, signatures computed once)
-    val buckets = c.groupBy("bucket")
-      .agg(sort_array(collect_list(struct(col("id"), col("vec"))))
-        .as("members"))
-      .filter(size(col("members")).between(2, maxBucketSize))
-    buckets
-      .select(explode(flatten(transform(col("members"), (x, i) =>
-        transform(slice(col("members"), i + 2, size(col("members"))),
-          y => struct(
-            x.getField("id").as("id_a"),
-            y.getField("id").as("id_b"),
-            cosine(x.getField("vec"), y.getField("vec")).as("sim"))))))
-        .as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
-        col("p.sim").as("sim"))
-      // !isnan: a NaN cosine compares largest and would pass any
-      // threshold, pairing a corrupt vector with every bucket-mate
-      .filter(!isnan(col("sim")) && col("sim") >= threshold)
+    // one scan → bucket groupBy → in-bucket pairwise combinations (no
+    // self-join, signatures computed once). !isnan: a NaN cosine
+    // compares largest and would pass any threshold, pairing a corrupt
+    // vector with every bucket-mate
+    Dedup.cappedBucketPairs(c, Seq("bucket"),
+      struct(col("id"), col("vec")), maxBucketSize) { (x, y) =>
+      struct(x.getField("id").as("id_a"), y.getField("id").as("id_b"),
+        cosine(x.getField("vec"), y.getField("vec")).as("sim"))
+    }.filter(!isnan(col("sim")) && col("sim") >= threshold)
   }
 }

@@ -204,21 +204,14 @@ object Winnow {
     * filter), then in-bucket pairs explode at pinned width — the
     * byte-tiny/CPU-quadratic stage AQE would otherwise coalesce onto
     * 1-3 cores — and one final shuffle counts shared hashes per pair.
-    * Same plan skeleton as [[Dedup.candidatesFromSignatures]]. */
+    * The bucket rule is [[Dedup.cappedBucketPairs]]. */
   def sharedFingerprintPairs(docs: DataFrame, idCol: String, textCol: String,
                              k: Int = 3, w: Int = 4, minShared: Int = 2,
-                             maxDocFreq: Int = 100): DataFrame = {
-    val buckets = Dedup.pinKeyed(
-        fingerprintHashes(docs, idCol, textCol, k, w), col("fp_hash"))
-      .groupBy("fp_hash")
-      .agg(sort_array(collect_list(col("fid"))).as("members"))
-      .filter(size(col("members")).between(2, maxDocFreq))
-    buckets
-      .select(explode(Dedup.bucketPairs(col("members"),
-        (x, y) => struct(x.as("id_a"), y.as("id_b")))).as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
+                             maxDocFreq: Int = 100): DataFrame =
+    Dedup.cappedBucketPairs(fingerprintHashes(docs, idCol, textCol, k, w),
+        Seq("fp_hash"), col("fid"), maxDocFreq)(
+        (x, y) => struct(x.as("id_a"), y.as("id_b")))
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).cast("bigint").as("n_shared"))
       .filter(col("n_shared") >= minShared)
-  }
 }

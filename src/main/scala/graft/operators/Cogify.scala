@@ -296,7 +296,10 @@ object Cogify {
   class RasterCogTransform(tileSize: Int = 256) extends FileTransform {
     def toCog(url: String, collection: String,
               config: CollectionConfig): String = {
-      val in = java.nio.file.Paths.get(url.stripPrefix("file://"))
+      // Hadoop's parse: `file:/p` (what listing emits), `file:///p` and
+      // a bare `/p` all name the same local file
+      val in = java.nio.file.Paths.get(
+        new org.apache.hadoop.fs.Path(url).toUri.getPath)
       val bytes = java.nio.file.Files.readAllBytes(in)
       val cog = (if (url.endsWith(".tif")) tiffToCog(bytes, tileSize)
                  else classicNetcdfToCog(bytes, config, tileSize))

@@ -9,6 +9,12 @@ import java.nio.file.Files
 class CatalogOpsSpec extends SparkSuite {
   import spark.implicits._
 
+  private def items(rows: (String, String, String)*) = rows.toSeq
+    .toDF("collection", "id", "d")
+    .withColumn("datetime", to_timestamp(col("d"))).drop("d")
+    .withColumn("start_datetime", lit(null).cast("timestamp"))
+    .withColumn("end_datetime", lit(null).cast("timestamp"))
+
   test("summary, get, and partition-scoped delete") {
     val path = Files.createTempDirectory("catops").toString + "/t"
     val items = Seq(
@@ -52,11 +58,6 @@ class CatalogOpsSpec extends SparkSuite {
 
   test("upsert replaces clashing ids, appends the rest, skips other partitions") {
     val path = Files.createTempDirectory("catops-up").toString + "/t"
-    def items(rows: (String, String, String)*) = rows.toSeq
-      .toDF("collection", "id", "d")
-      .withColumn("datetime", to_timestamp(col("d"))).drop("d")
-      .withColumn("start_datetime", lit(null).cast("timestamp"))
-      .withColumn("end_datetime", lit(null).cast("timestamp"))
     items(("a", "i1", "2020-01-01"), ("a", "i2", "2020-06-01"),
       ("b", "i3", "2021-01-01"))
       .write.partitionBy("collection").parquet(path)
@@ -83,5 +84,35 @@ class CatalogOpsSpec extends SparkSuite {
     assert(CatalogOps.upsert(spark, path,
       items(("b", "i6", "2024-01-01"))) == 0)
     assert(spark.read.parquet(path).count() == 6)
+  }
+
+  test("upsert of file-sourced items with shuffled key joins groups " +
+    "matches by the catalog scan's files") {
+    val dir = Files.createTempDirectory("catops-json").toString
+    val path = s"$dir/t"
+    items(("a", "i1", "2020-01-01"), ("a", "i2", "2020-06-01"),
+      ("b", "i3", "2021-01-01"))
+      .write.partitionBy("collection").parquet(path)
+    // incoming items scan a JSON file source of their own, and no join
+    // may broadcast: both used to break the per-file match grouping
+    val incoming = items(("a", "i2", "2022-12-31"),
+      ("b", "i3", "2023-03-03"), ("a", "i4", "2022-01-01"))
+    incoming.write.json(s"$dir/in")
+    val json = spark.read.schema(incoming.schema).json(s"$dir/in")
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      assert(CatalogOps.upsert(spark, path, json) == 2)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    val out = spark.read.parquet(path)
+      .select(col("collection"), col("id"),
+        date_format(col("datetime"), "yyyy-MM-dd"))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      .sorted.toSeq
+    assert(out == Seq(("a", "i1", "2020-01-01"), ("a", "i2", "2022-12-31"),
+      ("a", "i4", "2022-01-01"), ("b", "i3", "2023-03-03")))
+    assert(CatalogOps.delete(spark, path, Seq("i1", "i3")) == 2)
+    assert(spark.read.parquet(path).select("id").as[String].collect()
+      .sorted.toSeq == Seq("i2", "i4"))
   }
 }

@@ -726,6 +726,36 @@ class CogWriterSpec extends SparkSuite {
     assert(m.width == 6 && m.height == 4)
   }
 
+  test("listing → cogify: Hadoop `file:/path` urls open in the real " +
+    "transform (no cog_error)") {
+    import graft.model.PipelineEvent
+    import graft.sources.{Discovery, RasterFixtures}
+    val root = Files.createTempDirectory("cogify-listing")
+    Files.createDirectories(root.resolve("pre"))
+    Files.write(root.resolve("pre/a.tif"),
+      RasterFixtures.stripTiff(5, 4, 0 until 20))
+    val ev = PipelineEvent(collection = "c", discovery = "s3",
+      bucket = Some(s"file://$root"), prefix = "pre",
+      filenameRegex = Some(".*\\.tif$"), cogify = true)
+    val objs = Discovery.listing(spark, ev)
+    val url = objs.select("remote_fileurl").head.getString(0)
+    assert(url.startsWith("file:/") && !url.startsWith("file://"), url)
+    val out = Cogify.run(objs, new Cogify.RasterCogTransform(),
+      configs = Map.empty).collect()
+    assert(out.length == 1)
+    val err = out.head.getAs[String]("cog_error")
+    assert(err == null, s"cog_error: $err")
+    val m = GeoTiff.parse(Files.readAllBytes(
+      java.nio.file.Paths.get(out.head.getAs[String]("remote_fileurl"))))
+      .fold(e => fail(e), identity)
+    assert(m.width == 5 && m.height == 4 && m.tileWidth.nonEmpty)
+    // the other two spellings name the same file
+    val t = new Cogify.RasterCogTransform()
+    val cfg = Cogify.CollectionConfig()
+    Seq(s"file://$root/pre/a.tif", s"$root/pre/a.tif").foreach(u =>
+      assert(t.toCog(u, "c", cfg) == s"$root/pre/a.tif"))
+  }
+
   test("no-geo sources re-tile WITHOUT a fabricated geo block; " +
     "carried geo keeps its Projected/Geographic key kind") {
     import graft.sources.{GeoTiff, GeoTiffWriter, RasterFixtures}
