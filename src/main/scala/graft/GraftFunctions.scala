@@ -16,6 +16,11 @@ import org.apache.spark.sql.types.StringType
   *  - `extract_dates(filename[, range])` → struct<start_datetime,
   *    end_datetime, single_datetime> (the F1 cascade as one native
   *    codegen'd expression).
+  *
+  * `lsh_bucket`, `pq_encode` and `multi_asset_parts` are pure but
+  * non-deterministic to Spark, so project each into a column before
+  * use: Spark rejects them in join conditions, and CSE and constant
+  * folding are off for them.
   */
 object GraftFunctions {
 

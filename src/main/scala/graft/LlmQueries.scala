@@ -332,37 +332,25 @@ object LlmQueries {
   /** Hierarchical-router twin of [[semDedup]] (r13 judge ask #2): the
     * k ≥ hierK scale path — exact-collapse pre-pass + two-level
     * O(√k) router — was spec-pinned and sf10-diff-measured but had no
-    * DuckDB hash gate. This query forces `hierK` BELOW its cell count
+    * DuckDB hash gate. This query lowers `hierK` BELOW its cell count
     * so the scale path runs at every sf against the SAME exact
     * all-pairs-closure oracle as q_semdedup: zero false merges AND
     * full recall through the coarse→fine route are hash-gated every
-    * round. The conf override is scoped to plan construction (the
-    * router embeds at build time) and restored after. */
+    * round. */
   def semDedupHier(s: SparkSession, dir: String): DataFrame = {
     val (all, ne) = semCorpus(s, dir)
     // force k over the lowered gate but keep cells ∝ corpus above it
     val k = math.max(64, ((2 * ne + (ne + 2) / 3) / 300L).toInt)
-    // save/restore rather than unset: a pre-existing session-level
-    // override of these knobs must survive this query's build
-    val prevK = s.conf.getOption("spark.graft.semdedup.hierK")
-    val prevProbes = s.conf.getOption("spark.graft.semdedup.coarseProbes")
-    s.conf.set("spark.graft.semdedup.hierK", "64")
     // deeper routing than q_semdedup's flat assignTop=2: the gate
     // demands EXACT agreement with the all-pairs closure, and at
     // 2 coarse probes × 2 fine cells six sf1 near-pairs straddled the
     // route (base and near vector probing disjoint fine sets — the
-    // r14 sweep caught it at 0.013%). 4×4 keeps the per-row cost
-    // O(√k) and recalls every pair at sf0.01/sf0.1/sf1 — the measured
-    // dial between "scale path" and "zero loss on the gated corpus"
-    s.conf.set("spark.graft.semdedup.coarseProbes", "4")
-    try Similarity.semanticDedup(all, threshold = 0.999,
-      nCentroids = k, assignTop = 4).orderBy("vec_id")
-    finally {
-      prevK.fold(s.conf.unset("spark.graft.semdedup.hierK"))(
-        v => s.conf.set("spark.graft.semdedup.hierK", v))
-      prevProbes.fold(s.conf.unset("spark.graft.semdedup.coarseProbes"))(
-        v => s.conf.set("spark.graft.semdedup.coarseProbes", v))
-    }
+    // r14 sweep caught it at 0.013%). 4×4 (the router's fixed 4
+    // coarse probes) keeps the per-row cost O(√k) and recalls every
+    // pair at sf0.01/sf0.1/sf1 — the measured dial between "scale
+    // path" and "zero loss on the gated corpus"
+    Similarity.semanticDedup(all, threshold = 0.999,
+      nCentroids = k, assignTop = 4, hierK = 64).orderBy("vec_id")
   }
 
   /** PII redaction audit: deterministic PII synthesized onto each doc
@@ -783,7 +771,7 @@ object LlmQueries {
       .join(comps, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-      .localCheckpoint(false)
+      .materialized("q_dup_clusters_assigned")
     // size via map-side-combinable groupBy + join-back (the
     // keepBestPerCluster shape), NOT count-over-window: a 10⁶-member
     // viral cluster reduces to per-partition counters under the agg,
@@ -822,7 +810,7 @@ object LlmQueries {
         coalesce(col("cluster_id"), col("doc_id")))
       // lazy: keepBestPerCluster's min-agg branch populates the blocks
       // inside the final action; no separate materialization job
-      .localCheckpoint(false)
+      .materialized("q_dedup_best_clustered")
     Dedup.keepBestPerCluster(clustered, "doc_id", "cluster_id",
       col("__prio"))
       .select("doc_id")

@@ -8,6 +8,7 @@ import graft.sources.Discovery
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materializer.MaterializeOps
 
 /** The operator-coverage query suite (SURVEY §2): each entry exercises
   * one implemented operator against the synthetic testdata tables and
@@ -368,7 +369,7 @@ object Queries {
     // events scan per branch; custs is a plain pruned scan, re-reading
     // it per branch is cheaper than materializing it would be
     val users = t(s, dir, "events").select(col("user_id").as("k"))
-      .distinct().localCheckpoint(true)
+      .distinct().materialized("q_u_set_ops_users", eager = true)
     val custs = t(s, dir, "customer").select(col("c_custkey").as("k"))
     users.intersect(custs).agg(count(lit(1)).as("n_common"))
       .crossJoin(users.except(custs).agg(count(lit(1)).as("n_only_users")))

@@ -70,7 +70,8 @@ case class MultiAssetPartsExpr(url: Expression, regex: Expression,
   // planned as Filter(isnotnull(multiassetpartsexpr(url))) BELOW the
   // Project that evaluates it again — 2x the dominant per-row cost of
   // the J1 map side (measured: core.parts is 0.55 s/600k rows
-  // single-thread; the fused scan task paid ~1.1 s).
+  // single-thread; the fused scan task paid ~1.1 s). Project it
+  // before use: see the restriction in [[graft.GraftFunctions]].
   override lazy val deterministic: Boolean = false
   override def dataType: DataType = StructType(Seq(
     StructField("product_id", StringType, nullable = false),

@@ -105,6 +105,7 @@ case class PqEncodeExpr(vec: Expression, codebook: Expression,
   // size) into a Filter below the encoding projection — the q_ann_pq /
   // q_ann_ivfpq plans carried `isnotnull(element_at(pqencodeexpr(..)))`
   // on the raw scan plus the same encode again in the Project.
+  // Project it before use: see the restriction in [[graft.GraftFunctions]].
   override lazy val deterministic: Boolean = false
 
   override def checkInputDataTypes()

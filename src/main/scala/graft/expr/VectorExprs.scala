@@ -202,7 +202,8 @@ case class LshBucketExpr(vec: Expression, nBits: Expression, dim: Expression)
   // inferred `isnotnull(bucket)` is not alias-substituted below the
   // projection — that pushdown re-ran the nBits x dim hyperplane dot
   // pass per corpus row in a Filter AND the Project (q_ann_lsh /
-  // q_embed_near_dups plans, guide §4.4 duplication).
+  // q_embed_near_dups plans, guide §4.4 duplication). Project it
+  // before use: see the restriction in [[graft.GraftFunctions]].
   override lazy val deterministic: Boolean = false
 
   private def elemType: DataType =

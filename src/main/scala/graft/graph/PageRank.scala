@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materializer.MaterializeOps
 
 /** Distributed PageRank by power iteration — the canonical iterative
   * graph computation (page/domain authority scoring is a standard
@@ -77,7 +78,7 @@ object PageRank {
     // blocks inside its own materialization job, so the edge build no
     // longer pays a separate scheduled pass; nodes.count() and the
     // iterations then read the cached blocks.
-    val e = edges.select(col("src"), col("dst")).localCheckpoint(false)
+    val e = edges.select(col("src"), col("dst")).materialized("pagerank_edges")
     // the rank state comes out of shuffles at numShufflePartitions —
     // degEdges must sit at the SAME count or EnsureRequirements
     // re-shuffles the edge side inside every iteration (on a default
@@ -94,14 +95,14 @@ object PageRank {
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
       .distinct()
-      .localCheckpoint(false)
+      .materialized("pagerank_nodes")
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint(false)
+      .materialized("pagerank_outdeg")
     // partitioned by src ON PURPOSE: the per-iteration contribution
     // join reuses this layout against the node-keyed rank state
     val degEdges = e.join(outDeg, "src")
       .repartition(par, col("src"))
-      .localCheckpoint(true)
+      .materialized("pagerank_deg_edges", eager = true)
 
     val n = nodes.count()
     if (n == 0) return (nodes.withColumn("rank", lit(0L)), 0)

@@ -102,7 +102,9 @@ object Dedup {
     * from AQE byte-coalescing) establishes both the full width AND the
     * clustering the downstream aggregation needs, so EnsureRequirements
     * schedules no second exchange — where `groupBy.agg` followed by a
-    * round-robin pinWidth paid two. */
+    * round-robin pinWidth paid two. Assumes no few keys dominate: the
+    * stage after it runs on the key hash layout, so a hot key lands
+    * on one core where a round-robin pin would balance. */
   private[graft] def pinKeyed(df: DataFrame, keys: Column*): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism, keys: _*)
 
@@ -305,7 +307,7 @@ object Dedup {
     // shingle frame)
     val sh = reg(docs).select(col(idCol).as("jid"),
       shingleHashes(col(textCol), k).as("sh"))
-      .localCheckpoint(true)
+      .materialized("ngram_jaccard_shingles", eager = true)
     pairs
       .join(sh.withColumnRenamed("jid", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
       .join(sh.withColumnRenamed("jid", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
@@ -436,8 +438,8 @@ object Dedup {
     * of (id, shingle hashes), the standard LSH-join shape (Spark
     * MLlib's MinHashLSH does the same) — and unpersisted before
     * returning: the result (the pair set, tiny next to the corpus) is
-    * eagerly materialized via `localCheckpoint`, so no cached corpus
-    * frame leaks into the session. */
+    * eagerly materialized through [[graft.Materializer]], so no cached
+    * corpus frame leaks into the session. */
   /** @param prefilterMargin opt-in candidate pruning BEFORE the exact
     *   verify join: candidate pairs join back to signatures (64·8 B a
     *   side vs ~KiB shingle sets) and survive only when the agreement
@@ -465,7 +467,7 @@ object Dedup {
       val pairs = prefilterMargin match {
         case None => candidates
         case Some(margin) =>
-          val sig = withSig.localCheckpoint(true) // tiny: id + 64 longs
+          val sig = withSig.materialized("near_dup_signatures", eager = true)
           candidates
             .join(sig.select(col("doc_id").as("id_a"),
               col("sig").as("sig_a")), "id_a")
@@ -483,7 +485,7 @@ object Dedup {
           size(array_union(col("sh_a"), col("sh_b"))))
         .filter(col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
-        .localCheckpoint(true)
+        .materialized("near_dup_pairs", eager = true)
     } finally sh.unpersist()
   }
 
@@ -550,11 +552,11 @@ object Dedup {
     // shingle tail recomputes per action.
     val bsh = spread(reg(batch), col(idCol)).select(col(idCol).as("jid"),
       shingleHashes(col(textCol), k).as("sh"))
-      .localCheckpoint(true)
+      .materialized("catalog_dedup_batch_shingles", eager = true)
     val bsig = bsh.select(col("jid").as("doc_id"),
       minhashSignature(col("sh"), numHashes).as("sig"))
     val cand = crossCandidates(bsig, catalogSigs, numHashes, bands,
-      maxBucketSize).localCheckpoint(true)
+      maxBucketSize).materialized("catalog_dedup_candidates", eager = true)
     val needed = cand.select(col("id_cat").as(idCol)).distinct()
     // explicit repartition, not spread(): spread's width probe
     // executes the NON-adaptive sparkPlan, which for a join still

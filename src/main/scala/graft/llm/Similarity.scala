@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materializer.MaterializeOps
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -283,6 +284,14 @@ object Similarity {
     localTopK(scored, k)
   }
 
+  /** Cell count at or above which [[semanticDedup]] switches from the
+    * flat −dot argmin (O(k) per row) to the two-level
+    * [[graft.expr.SemRouter]] (O(√k) per row) with
+    * proportional-to-sample-mass fine-cell allocation. The bench-SF
+    * registry queries stay below it (flat path bit-identical to every
+    * prior round); the corpus-scaled k of sf10+ crosses it. */
+  private[graft] val HierK = 512
+
   /** SemDeDup-style semantic deduplication: KMeans cells partition the
     * corpus, near-dup pairs are found by exact cosine WITHIN cells
     * only, resolved into clusters (connected components, min-id
@@ -306,39 +315,23 @@ object Similarity {
     * cell sets intersect) — the recall knob for near-dups straddling
     * a Voronoi boundary, at `assignTop×` candidate cost. Component
     * resolution is the alternating-stars loop — O(log n) rounds on
-    * the (tiny) edge set. */
-  /** @param driverMaxEdges forwarded to
+    * the (tiny) edge set.
+    *
+    * @param driverMaxEdges forwarded to
     *   [[Dedup.connectedComponentsStars]]: edge counts at or below it
     *   resolve with the exact driver union-find, above it the
     *   distributed alternating-stars loop runs. Tune down on
-    *   small-heap drivers. */
-  /** Cell count at or above which [[semanticDedup]] switches from the
-    * flat −dot argmin (O(k) per row) to the two-level
-    * [[graft.expr.SemRouter]] (O(√k) per row) with
-    * proportional-to-sample-mass fine-cell allocation. The bench-SF
-    * registry queries stay below it (flat path bit-identical to every
-    * prior round); the corpus-scaled k of sf10+ crosses it.
-    * Deployment override: `spark.graft.semdedup.hierK` (and
-    * `spark.graft.semdedup.coarseProbes` for the recall/cost dial —
-    * the sf10 equivalence run measured 2 probes losing 0.24% and 4
-    * probes 0.08% of BORDERLINE near-pairs vs the flat route, at 9×
-    * less assignment+pair time; exact clones are never at risk, the
-    * collapse pre-pass links them before any routing). */
-  private[graft] val HierK = 512
-
-  /** SemDeDup-style embedding-cluster dedup. NOTE for callers passing
-    * `nCentroids >= 512` (spark.graft.semdedup.hierK): candidate
-    * generation switches to the two-level router — an explicit
-    * recall/cost trade (measured 0.08% of borderline near-pairs at
-    * the 4-probe default, 9× less assignment+pair work; exact clones
-    * are always caught via the collapse pre-pass) whose dials are the
-    * session confs above. Below hierK the flat assignment runs,
-    * bit-identical to prior rounds. */
+    *   small-heap drivers.
+    * @param hierK [[HierK]]: from `nCentroids >= hierK` on, the
+    *   two-level router trades recall for cost (sf10: 0.08% of
+    *   BORDERLINE near-pairs lost for 9× less assignment+pair work;
+    *   the collapse pre-pass still catches every exact clone). */
   def semanticDedup(corpus: DataFrame, threshold: Double,
                     nCentroids: Int = 16, assignTop: Int = 1,
                     idCol: String = "vec_id",
                     vecCol: String = "embedding",
-                    driverMaxEdges: Long = Dedup.DefaultDriverMaxEdges)
+                    driverMaxEdges: Long = Dedup.DefaultDriverMaxEdges,
+                    hierK: Int = HierK)
   : DataFrame = {
     require(assignTop >= 1 && assignTop <= nCentroids,
       s"assignTop must be in [1, $nCentroids], got $assignTop")
@@ -369,8 +362,6 @@ object Similarity {
     // compare LARGEST under Spark's nan-safe ordering, not null) out
     // of the collapsible set. ONE vec-keyed shuffle produces both the
     // reps and the member edges.
-    val hierK = corpus.sparkSession.conf
-      .get("spark.graft.semdedup.hierK", HierK.toString).toInt
     // collapse needs cosine(v, v) >= threshold for identical vectors,
     // and the FLOAT cosine of identical vectors is 1 minus a few ulps
     // (norm round-trip) — the 1e-12 margin is ~1000x that error, so
@@ -472,7 +463,7 @@ object Similarity {
     val assignedM = assigned
       .withColumn("nrm", norm(col("vec")))
       .repartition(par, col("cell"))
-      .localCheckpoint(true)
+      .materialized("semdedup_assigned", eager = true)
     val a = assignedM.select(col("cell"), col("id").as("id_a"),
       col("vec").as("vec_a"), col("nrm").as("nrm_a"))
     val b = assignedM.select(col("cell"), col("id").as("id_b"),
@@ -554,14 +545,12 @@ object Similarity {
       cents.foreach(fines += _)
       nextId += cents.length
     }
-    // 4 coarse probes default: the sf10 equivalence run measured 2
-    // probes losing 376 of ~155k borderline near-pairs (0.24%) across
+    // 4 coarse probes: the sf10 equivalence run measured 2 probes
+    // losing 376 of ~155k borderline near-pairs (0.24%) across
     // coarse boundaries; 4 cut that to 135 rows (0.08%) at ~2× the
     // fine-candidate cost — still O(√k) per row vs the flat O(k)
-    val wc = corpus.sparkSession.conf
-      .get("spark.graft.semdedup.coarseProbes", "4").toInt
     new graft.expr.SemRouter(coarse, fines.result().toArray,
-      owned.result(), wc = math.max(1, math.min(wc, coarse.length)),
+      owned.result(), wc = math.min(4, coarse.length),
       topN = assignTop)
   }
 

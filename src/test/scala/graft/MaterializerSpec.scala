@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Pins the [[Materializer]] seam: the default strategy reproduces
@@ -47,6 +48,77 @@ class MaterializerSpec extends SparkSuite {
       // and they are REAL parquet: readable back with rows
       assert(spark.read.parquet(s"$dir/curate_dedup_survivors")
         .count() > 0)
+    } finally {
+      Materializer.reset()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
+  }
+
+  test("PersistedTable covers every reuse site: each library entry " +
+    "point keeps its rows and writes a table per site") {
+    def sentence(seed: Int): String = {
+      val rnd = new scala.util.Random(seed)
+      Seq.fill(30)(s"w${rnd.nextInt(400)}").mkString(" ")
+    }
+    // docs i and i+12 share a sentence (near-dups); every doc shares
+    // one boilerplate line
+    val corpus = (1L to 30L).map(i =>
+      (i, s"${sentence((i % 12).toInt)} tail$i. all rights reserved"))
+      .toDF("doc_id", "text")
+    val batch = corpus.filter(col("doc_id") <= 3)
+      .select((col("doc_id") + 100).as("doc_id"), col("text"))
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 1L))
+      .toDF("src", "dst")
+    val vecs = Seq((1L, Seq(1.0, 0.0, 0.0)), (2L, Seq(1.0, 0.0, 0.01)),
+      (3L, Seq(0.0, 1.0, 0.0))).toDF("vec_id", "embedding")
+    import graft.llm.{Dedup, Dsir, LineDedup, Phrases, Similarity}
+    import graft.graph.{PageRank, Triangles}
+    val entries = Seq[(String, () => DataFrame)](
+      "ngramJaccard" -> (() => Dedup.ngramJaccard(
+        Seq((1L, 13L), (2L, 5L)).toDF("id_a", "id_b"), corpus,
+        "doc_id", "text")),
+      "nearDuplicates" -> (() =>
+        Dedup.nearDuplicates(corpus, "doc_id", "text", threshold = 0.7)),
+      "nearDuplicates prefilter" -> (() =>
+        Dedup.nearDuplicates(corpus, "doc_id", "text", threshold = 0.7,
+          prefilterMargin = Some(0.15))),
+      "nearDuplicatesAgainstCatalog" -> (() =>
+        Dedup.nearDuplicatesAgainstCatalog(batch, "doc_id", "text",
+          Dedup.signatureCatalog(corpus, "doc_id", "text"), corpus,
+          threshold = 0.7)),
+      "importanceScores" -> (() => Dsir.importanceScores(corpus,
+        corpus.filter(col("doc_id") < 10), "doc_id", "text", 256)),
+      "importanceScoresSubset" -> (() => Dsir.importanceScoresSubset(
+        corpus, col("doc_id") < 10, "doc_id", "text", 256)),
+      "pmiBigrams" -> (() =>
+        Phrases.pmiBigrams(corpus, "doc_id", "text", minCount = 2)),
+      "dropSharedLines" -> (() =>
+        LineDedup.dropSharedLines(corpus, "doc_id", "text")),
+      "Triangles.count" -> (() => Triangles.count(edges)),
+      "PageRank.run" -> (() => PageRank.run(edges)),
+      "semanticDedup" -> (() =>
+        Similarity.semanticDedup(vecs, threshold = 0.999, nCentroids = 2)))
+    def rows(df: DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    val base = entries.map { case (name, run) => name -> rows(run()) }
+    for (name <- Seq("nearDuplicates", "nearDuplicates prefilter",
+        "nearDuplicatesAgainstCatalog", "pmiBigrams"))
+      assert(base.toMap.apply(name).nonEmpty, s"$name: empty fixture output")
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_materializer_sites").toString
+    Materializer.set(Materializer.PersistedTable(dir))
+    try {
+      for (((name, run), (_, expect)) <- entries.zip(base))
+        assert(rows(run()) === expect, s"$name changed under PersistedTable")
+      for (site <- Seq("ngram_jaccard_shingles", "near_dup_pairs",
+          "near_dup_signatures", "catalog_dedup_batch_shingles",
+          "catalog_dedup_candidates", "dsir_bucket_counts",
+          "dsir_subset_bucket_counts", "phrases_unigrams",
+          "line_dedup_lines", "triangles_undirected", "triangles_oriented",
+          "pagerank_edges", "pagerank_nodes", "pagerank_outdeg",
+          "pagerank_deg_edges", "semdedup_assigned"))
+        assert(new java.io.File(s"$dir/$site").isDirectory,
+          s"missing persisted reuse table $site")
     } finally {
       Materializer.reset()
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))

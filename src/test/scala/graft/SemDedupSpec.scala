@@ -68,13 +68,10 @@ class SemDedupSpec extends SparkSuite {
     // the collapse rides the scale path (k >= hierK): force it on at
     // this tiny k so the pre-pass itself is what's under test — and
     // pin that the flat small-k path gives the SAME answer
-    spark.conf.set("spark.graft.semdedup.hierK", "2")
-    val out =
-      try Similarity.semanticDedup(c, threshold = 0.999,
-        nCentroids = 2, assignTop = 2)
-        .orderBy("vec_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
-      finally spark.conf.unset("spark.graft.semdedup.hierK")
+    val out = Similarity.semanticDedup(c, threshold = 0.999,
+      nCentroids = 2, assignTop = 2, hierK = 2)
+      .orderBy("vec_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
     val expected = Seq(
       (3L, 3L, true), (4L, 3L, false), (5L, 3L, false), (9L, 3L, false),
       (30L, 30L, true), (31L, 31L, true), // zeros stay singletons
@@ -116,12 +113,9 @@ class SemDedupSpec extends SparkSuite {
       (4L, Seq(3.0, 4.0, 0.0, 0.0)))
       .toDF("vec_id", "embedding")
     // force the scale path so ONLY the threshold term gates collapse
-    spark.conf.set("spark.graft.semdedup.hierK", "2")
-    val out =
-      try Similarity.semanticDedup(c, threshold = 1.0,
-        nCentroids = 2, assignTop = 2).orderBy("vec_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toMap
-      finally spark.conf.unset("spark.graft.semdedup.hierK")
+    val out = Similarity.semanticDedup(c, threshold = 1.0,
+      nCentroids = 2, assignTop = 2, hierK = 2).orderBy("vec_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(out(2L) == 2L, "sqrt(2)-normed clones must stay split at 1.0")
     assert(out(4L) == 3L, "exact-norm clones merge at 1.0 (cosine == 1)")
   }
@@ -139,21 +133,16 @@ class SemDedupSpec extends SparkSuite {
     val nans = Seq(
       (90L, Seq(Double.NaN, 0.0, 0.0, 0.0)),
       (91L, Seq(0.0, Double.NaN, 0.0, 0.0)))
-    spark.conf.set("spark.graft.semdedup.hierK", "2")
-    val (withNan, without) =
-      try {
-        val a = Similarity.semanticDedup(
-          (clean ++ nans).toDF("vec_id", "embedding"),
-          threshold = 0.999, nCentroids = 4, assignTop = 2)
-          .orderBy("vec_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
-        val b = Similarity.semanticDedup(
-          clean.toDF("vec_id", "embedding"),
-          threshold = 0.999, nCentroids = 4, assignTop = 2)
-          .orderBy("vec_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
-        (a, b)
-      } finally spark.conf.unset("spark.graft.semdedup.hierK")
+    val withNan = Similarity.semanticDedup(
+      (clean ++ nans).toDF("vec_id", "embedding"),
+      threshold = 0.999, nCentroids = 4, assignTop = 2, hierK = 2)
+      .orderBy("vec_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
+    val without = Similarity.semanticDedup(
+      clean.toDF("vec_id", "embedding"),
+      threshold = 0.999, nCentroids = 4, assignTop = 2, hierK = 2)
+      .orderBy("vec_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
     assert(withNan ==
       without ++ Seq((90L, 90L, true), (91L, 91L, true)))
   }
